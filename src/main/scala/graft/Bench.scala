@@ -146,21 +146,20 @@ object Bench {
         s"cpu=$cpuRatio io=$ioRatio median=$medRatio) — " +
         "target/bench_queries.json keeps the prior at-rest baseline")
     }
-    // r16 (VERDICT r15 task 3): every FULL run also writes the complete
-    // per-query map to a COMMITTED per-round artifact, so round-over-
-    // round per-query comparison survives the driver's stdout tail
-    // truncation (PERF n_common was 0 two rounds running). Additive
-    // only — the timed methodology above is untouched.
+    // every FULL run also writes the complete per-query map to a
+    // COMMITTED artifact at one fixed path, so run-over-run per-query
+    // comparison does not depend on a truncated stdout tail and is a
+    // plain `git diff` of one file. Additive only — the timed
+    // methodology above is untouched.
     if (only.isEmpty) {
+      val record = java.nio.file.Paths.get("plans", "bench_queries.json")
       try {
-        val d = new java.io.File("plans/r16")
-        if (d.isDirectory)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("plans/r16/bench_queries.json"),
+        if (java.nio.file.Files.isDirectory(record.getParent))
+          java.nio.file.Files.writeString(record,
             s"""{"cpus":${Json.q(sys.env.getOrElse("SPARK_GRAFT_CPUS", ""))},"reps":$reps,"adopted":${adopt && reps == 1},"run":$line}""" + "\n")
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] plans/r16/bench_queries.json not written: $e")
+          System.err.println(s"[bench] $record not written: $e")
       }
     }
     println(line)

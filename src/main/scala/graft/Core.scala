@@ -529,7 +529,8 @@ object Sessions {
     * Profile had four hand-copies whose CPUS defaults had already
     * drifted): local[cpus] with shuffle partitions = cpus, UTC session
     * timezone (the oracle gate's timezone — every main must run the
-    * exact computation the gate verified), UI off.
+    * exact computation the gate verified), UI off, and a generated-class
+    * cache sized for the CDC batch path and the LLM-operator mix.
     */
   def localHarness(defaultCpus: Int, logLevel: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -538,6 +539,9 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // static; Spark's 100 entries made every CDC batch recompile ≈60
+      // generated classes (the LLM-operator mix too) and re-warm the JIT
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
     s

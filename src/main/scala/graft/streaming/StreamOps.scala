@@ -381,20 +381,21 @@ object StreamOps {
     * explicitly): each micro-batch rewrites the FULL contents of every
     * touched bucket — O(|state| / buckets) rows per touched bucket per
     * batch, so a batch touching t buckets writes O(t · |state|/buckets)
-    * + O(batch) rows regardless of how small the batch is. Untouched
-    * buckets are never rewritten (asserted in StateMaintenanceSpec), and
-    * the bucket count is the operational knob: size it so |state|/buckets
-    * matches the tolerable per-batch write (at 100 TB state, thousands
-    * of buckets — the merge is per-bucket parallel). Version GC keeps
-    * disk metadata O(buckets): ≤ cdcStateBuckets + 2 version dirs in
-    * steady state regardless of batch history (loop-asserted in
-    * StateMaintenanceSpec).
+    * + O(batch) rows regardless of how small the batch is — the bound.
+    * The rest is done once: ONE shuffle of the state per batch (prev ∪
+    * batch by bucket; the latest-per-key window over (bucket,
+    * o_orderkey) rides it, bucket being a function of the key), one
+    * task and file per bucket dir, and the prior files read with the
+    * known schema (no inference job). Untouched buckets are never
+    * rewritten (asserted in StateMaintenanceSpec); the bucket count is
+    * the knob: size |state|/buckets to the tolerable per-batch write (at
+    * 100 TB state, thousands of buckets — the merge is per-bucket
+    * parallel). Version GC keeps disk metadata O(buckets): ≤
+    * cdcStateBuckets + 2 version dirs in steady state (loop-asserted).
     */
   private[graft] def mergeCdcTyped(typed: DataFrame, batchId: Long,
-      state: String,
-      cols: Seq[String] = Seq("o_orderkey", "o_totalprice", "es", "ts",
-        "type")): Set[Int] =
-    mergeCdcTypedTxn(typed, batchId, state, None, cols)
+      state: String): Set[Int] =
+    mergeCdcTypedTxn(typed, batchId, state, None)
 
   /** The merge, optionally with EXACTLY-ONCE offset semantics: when
     * `offsets` is given, the consumer's position is written INSIDE the
@@ -408,90 +409,95 @@ object StreamOps {
     * commit log does) expressed on the versioned bucket store.
     */
   private[graft] def mergeCdcTypedTxn(typed0: DataFrame, batchId: Long,
-      state: String, offsets: Option[Map[Int, Long]],
-      // the state row schema (generalized r15 for stream_mv_maintain,
-      // which carries o_custkey through the same store); the default is
-      // the original upsert-store contract
-      cols: Seq[String] = Seq("o_orderkey", "o_totalprice", "es", "ts",
-        "type")): Set[Int] = {
+      state: String, offsets: Option[Map[Int, Long]]): Set[Int] = {
     // the batch is consumed by TWO actions (the touched-bucket probe and
     // the merge write); without a persist each one re-reads the log and
     // re-parses the envelope JSON — at 100 TB that is the difference
     // between reading the micro-batch once and twice per merge
-    val typed = typed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val ss = typed.sparkSession
-    val withBucket = typed
-      .withColumn("bucket", pmod(col("o_orderkey"), lit(cdcStateBuckets)).cast("int"))
+    val typed = typed0
+      .select(col("o_orderkey"), col("o_totalprice"), col("es"), col("ts"),
+        col("type"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try mergeBuckets(typed, batchId, state, offsets, None)
+    finally { typed.unpersist(false); () }
+  }
+
+  /** The merge body over `rows`: the batch in the state row schema
+    * (mvMaintainBatch's also carries o_custkey), cached by the caller.
+    * `publish` gets the merged rows of the touched buckets after the
+    * commit — cached, one bucket per task — so it neither re-reads the
+    * files nor shuffles the state again.
+    */
+  private def mergeBuckets(rows: DataFrame, batchId: Long, state: String,
+      offsets: Option[Map[Int, Long]],
+      publish: Option[DataFrame => Unit]): Set[Int] = {
+    val ss = rows.sparkSession
+    val bucket = pmod(col("o_orderkey"), lit(cdcStateBuckets)).cast("int")
     // O(buckets) metadata, not data — bounded by cdcStateBuckets
-    val touched = withBucket.select("bucket").distinct().collect()
+    val touched = rows.select(bucket).distinct().collect()
       .map(_.getInt(0)).toSet
-    if (touched.nonEmpty) {
-      val prevPaths = cdcBucketPaths(state, batchId)
-        .collect { case (b, p) if touched(b) => p }.toSeq
-      val prev =
-        if (prevPaths.isEmpty) typed.select(cols.map(col): _*).limit(0)
-        else ss.read.parquet(prevPaths: _*)
-          .select(cols.map(col): _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_orderkey"))
-        .orderBy(col("es").desc, col("ts").desc)
-      val merged = prev
-        .unionByName(typed.select(cols.map(col): _*))
-        .withColumn("bucket", pmod(col("o_orderkey"), lit(cdcStateBuckets)).cast("int"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-        // one task → one file per bucket dir: without this the
-        // partitionBy write fans out (shuffle partitions × buckets)
-        // files, and the commit's per-file staging renames dominate
-        // micro-batch latency (measured ~2× on the merge phase)
-        .repartition(col("bucket"))
-      val target = s"$state/v=$batchId"
-      offsets match {
-        case None =>
-          merged.write.mode("overwrite").partitionBy("bucket").parquet(target)
-        case Some(ofs) =>
-          // leftovers from a crash mid-staging are invisible to readers
-          // (cdcBucketVersions lists only v=*); the replay sweeps them
-          val staging = new java.io.File(s"$state/.txn_v=$batchId")
-          graft.Scratch.deleteRecursively(staging)
-          merged.write.mode("overwrite").partitionBy("bucket")
-            .parquet(staging.getPath)
-          graft.Scratch.writeDurable(
-            staging.toPath.resolve("_offsets"),
-            ofs.toSeq.sorted.map { case (p, o) => s"$p $o" }.mkString("\n"))
-          graft.Scratch.deleteRecursively(new java.io.File(target)) // idempotent at-least-once replay
-          java.nio.file.Files.move(staging.toPath,
-            java.nio.file.Paths.get(target),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          graft.Scratch.fsyncDir(java.nio.file.Paths.get(state))
-      }
-      gcCdcVersions(state, batchId)
-      ()
-    } else offsets.foreach { ofs =>
-      // (empty range, exactly-once position publication below)
+    if (touched.isEmpty) {
       // EMPTY consumed range: the exactly-once position must STILL
       // advance — an empty tail is a legal log state, and skipping the
       // publication would leave the state's committed position stale so
       // a restarted consumer re-reads a range it already processed
       // (degrading to at-least-once). Publish a bucketless version
       // carrying only _offsets through the same atomic rename.
-      val target = s"$state/v=$batchId"
-      val staging = new java.io.File(s"$state/.txn_v=$batchId")
-      graft.Scratch.deleteRecursively(staging)
-      staging.mkdirs()
-      graft.Scratch.writeDurable(staging.toPath.resolve("_offsets"),
-        ofs.toSeq.sorted.map { case (p, o) => s"$p $o" }.mkString("\n"))
-      graft.Scratch.deleteRecursively(new java.io.File(target))
-      java.nio.file.Files.move(staging.toPath,
-        java.nio.file.Paths.get(target),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      graft.Scratch.fsyncDir(java.nio.file.Paths.get(state))
-      gcCdcVersions(state, batchId)
-      ()
+      offsets.foreach { ofs =>
+        commitTxnVersion(state, batchId, ofs)(_.mkdirs())
+        gcCdcVersions(state, batchId)
+      }
+      return touched
     }
+    val prevPaths = cdcBucketPaths(state, batchId)
+      .collect { case (b, p) if touched(b) => p }.toSeq
+    val prev =
+      if (prevPaths.isEmpty) rows.limit(0)
+      else ss.read.schema(rows.schema).parquet(prevPaths: _*)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("bucket"), col("o_orderkey"))
+      .orderBy(col("es").desc, col("ts").desc)
+    val merged0 = prev.unionByName(rows)
+      .withColumn("bucket", bucket)
+      // the ONE shuffle: one task → one file per bucket dir (else the
+      // write fans out partitions × buckets files, whose staging renames
+      // dominate micro-batch latency); the window runs inside it
+      .repartition(col("bucket"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+    val merged =
+      if (publish.isEmpty) merged0
+      else merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      def write(dir: String): Unit =
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      offsets match {
+        case None => write(s"$state/v=$batchId")
+        case Some(ofs) => commitTxnVersion(state, batchId, ofs)(d => write(d.getPath))
+      }
+      gcCdcVersions(state, batchId)
+      publish.foreach(_(merged))
+    } finally { if (publish.nonEmpty) merged.unpersist(false) }
     touched
-    } finally { typed.unpersist(false); () }
+  }
+
+  /** The exactly-once commit of `v=<batchId>`: `stage` fills the
+    * invisible `.txn_v=` dir (crash leftovers are swept by the replay),
+    * the position is written into it durably, and ONE atomic rename
+    * publishes it, replacing a replayed target; then the dir is fsync'd.
+    */
+  private def commitTxnVersion(state: String, batchId: Long,
+      ofs: Map[Int, Long])(stage: java.io.File => Unit): Unit = {
+    val target = java.nio.file.Paths.get(s"$state/v=$batchId")
+    val staging = new java.io.File(s"$state/.txn_v=$batchId")
+    graft.Scratch.deleteRecursively(staging)
+    stage(staging)
+    graft.Scratch.writeDurable(staging.toPath.resolve("_offsets"),
+      ofs.toSeq.sorted.map { case (p, o) => s"$p $o" }.mkString("\n"))
+    graft.Scratch.deleteRecursively(target.toFile)
+    java.nio.file.Files.move(staging.toPath, target,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.Scratch.fsyncDir(java.nio.file.Paths.get(state))
   }
 
   /** Recover the consumer position from the latest visible state
@@ -567,20 +573,28 @@ object StreamOps {
     * version and rewrites identical content — the at-least-once rule
     * every consumer relies on. `prevMap` re-shapes the stored prev
     * version to the delta schema (the quantile MV explodes its sketch
-    * state before re-folding).
+    * state before re-folding); left at its default, the stored version
+    * IS in the delta schema, so it is read with `deltas.schema` and no
+    * footer-inference job runs.
     */
   private[graft] def foldVersionedState(deltas: DataFrame, batchId: Long,
       state: String, fold: DataFrame => DataFrame,
-      prevMap: DataFrame => DataFrame = identity): Unit = {
+      prevMap: DataFrame => DataFrame = sameShape): Unit = {
     val ss = deltas.sparkSession
     val prevDirs = stateVersionsBelow(state, batchId)
     val prev =
       if (prevDirs.isEmpty) deltas.limit(0)
-      else prevMap(ss.read.parquet(s"$state/v=${prevDirs.max}"))
+      else {
+        val r = if (prevMap eq sameShape) ss.read.schema(deltas.schema) else ss.read
+        prevMap(r.parquet(s"$state/v=${prevDirs.max}"))
+      }
     fold(prev.unionByName(deltas))
       .write.mode("overwrite").parquet(s"$state/v=$batchId")
     gcStateVersions(state, prevDirs)
   }
+
+  /** foldVersionedState's default `prevMap`, compared by reference. */
+  private val sameShape: DataFrame => DataFrame = identity
 
   private[graft] def mergeSummingState(deltas: DataFrame, batchId: Long,
       state: String): Unit =
@@ -664,13 +678,8 @@ object StreamOps {
     * Two-epoch protocol (deterministic batch boundaries — one stream
     * RUN per epoch, the checkpoint resumes): epoch 1 delivers the
     * INSERT snapshot; epoch 2 the UPDATE/DELETE tail. Per micro-batch
-    * the work is [[mvMaintainBatch]] (r15 rebase): a BUCKETED
-    * tombstone merge (mergeCdcTyped carrying o_custkey), a per-touched-
-    * bucket live publish into the stable `smm_base/bucket=N` layout
-    * (untouched buckets' files byte-identical across the batch —
-    * StateMaintenanceSpec asserts it), the signed O(groups+δ) MV fold,
-    * and re-registration fingerprinted from the new base listing.
-    * After each epoch a PLAIN aggregate over the published base is
+    * the work is [[mvMaintainBatch]] (merge, per-touched-bucket live
+    * publish, MV fold, re-registration). After each epoch a PLAIN aggregate over the published base is
     * probed: a require proves it scanned `smm_mv` and not `smm_base`
     * (the snap discipline), and the values — epoch 1 = the insert
     * snapshot, epoch 2 = the fully-applied live set — hash against the
@@ -687,81 +696,68 @@ object StreamOps {
     */
   /** One micro-batch of streaming MV maintenance (r15 rebase — VERDICT
     * r14 task 2): the O(state)-per-batch publish is gone. Per batch:
-    *   1. BUCKETED tombstone merge via [[mergeCdcTypedTxn]] (carrying
-    *      o_custkey through the store): only the buckets this batch's
-    *      keys hash to are re-read and rewritten — O(touched ·
-    *      |state|/buckets + δ), the stream_cdc_upsert cost class.
-    *   2. live-rows publish PER TOUCHED BUCKET: the merged state of
-    *      exactly those buckets, tombstones dropped, written into the
-    *      STABLE `baseDir/bucket=N` layout through a dynamic-partition
-    *      overwrite — untouched buckets' files are never opened or
-    *      replaced (byte-identical across the batch, spec-asserted).
-    *   3. the signed O(groups+δ) MV fold (unchanged algebra): INSERT
-    *      +price/+1, UPDATE +(new−old)/0, DELETE −price/−1, folded into
-    *      the prior MV version, groups at 0 live orders dropped.
+    *   1. BUCKETED tombstone merge via [[mergeBuckets]] (carrying
+    *      o_custkey): only the touched buckets are re-read and rewritten
+    *      in full — O(touched · |state|/buckets + δ), the bound of this
+    *      path — with the state shuffled ONCE (by bucket).
+    *   2. live-rows publish PER TOUCHED BUCKET from the cached merge
+    *      result — no re-read, no second shuffle, one file per bucket
+    *      dir: tombstones dropped, written into the STABLE
+    *      `baseDir/bucket=N` layout by a dynamic-partition overwrite —
+    *      untouched buckets' files are never opened or replaced
+    *      (byte-identical across the batch, spec-asserted).
+    *   3. the signed MV fold in ONE aggregation: per-row contributions
+    *      (INSERT +price/+1, UPDATE +(new−old)/0, DELETE −price/−1)
+    *      summed straight into the prior MV version, groups at 0 live
+    *      orders dropped; exact decimals, so grouping cannot change it.
     *   4. re-registration of baseDir → the new MV version, fingerprinted
     *      from baseDir's CURRENT O(buckets) listing — the registry is
     *      the batch's last write, so a routed probe is never stale.
+    * Every read of this path's own files passes the known schema: no
+    * footer-inference job runs in a batch.
     * Replay-safe end to end: the merge reads versions < batchId only,
-    * the live publish is recomputed from that same merged state
-    * (content-idempotent dynamic overwrite), and the MV fold reads MV
-    * versions < batchId — an at-least-once re-execution rewrites
-    * identical content and re-registers the same mapping.
+    * the live publish is the same merged result (content-idempotent
+    * dynamic overwrite), and the MV fold reads MV versions < batchId —
+    * an at-least-once re-execution rewrites identical content and
+    * re-registers the same mapping.
     * Driven directly (no stream) by StateMaintenanceSpec's crash/
     * byte-identity tests and by streamMvMaintain's foreachBatch.
     */
   private[graft] def mvMaintainBatch(batch: DataFrame, batchId: Long,
       stateDir: String, baseDir: String, mvDir: String): Unit = {
     import graft.plans.MvRouting
+    import org.apache.spark.sql.types.DecimalType
     val ss = batch.sparkSession
     val t = graft.operators.Cdc.typeMapOrders(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // 1. bucketed merge (es, ts desc — stream_cdc_upsert's rule),
-      // tombstones kept in the versioned bucket store
-      val typed = t.select(col("o_orderkey"), col("o_custkey"),
-        col("o_totalprice"), col("es"), col("ts"), col("type"))
-      val touched = mergeCdcTyped(typed, batchId, stateDir,
-        cols = Seq("o_orderkey", "o_custkey", "o_totalprice", "es", "ts",
-          "type"))
-      // 2. per-bucket live publish: read ONLY the touched buckets'
-      // merged state (including the version just written) and replace
-      // exactly those bucket dirs under the stable base root
-      if (touched.nonEmpty) {
-        val paths = cdcBucketPaths(stateDir, batchId + 1)
-          .collect { case (b, p) if touched(b) => p }.toSeq
-        ss.read.parquet(paths: _*)
-          .filter(col("type") =!= "DELETE")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .withColumn("bucket",
-            pmod(col("o_orderkey"), lit(cdcStateBuckets)).cast("int"))
-          // one task → one file per touched bucket: the publish is
-          // O(touched · |state|/buckets) rows, and the dynamic
-          // overwrite's per-file staging commit is the cost driver at
-          // micro-batch cadence
-          .repartition(col("bucket"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket").parquet(baseDir)
-      }
-      // 3. the signed MV delta (streamSummingMv's exact algebra)
+      val live = Seq(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+      // 1 + 2. bucketed merge (es, ts desc — stream_cdc_upsert's rule),
+      // then the touched buckets' live rows replace their base dirs
+      mergeBuckets(t.select(live ++ Seq(col("es"), col("ts"), col("type")): _*),
+        batchId, stateDir, None, Some { merged =>
+          merged.filter(col("type") =!= "DELETE")
+            .select(live :+ col("bucket"): _*)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket").parquet(baseDir)
+        })
+      // 3. the signed MV contributions (streamSummingMv's exact algebra)
       val oldPrice = element_at(col("old_img"), "o_totalprice")
         .cast("double")
       val contrib = when(col("type") === "INSERT", col("o_totalprice"))
         .when(col("type") === "UPDATE", col("o_totalprice") - oldPrice)
         .otherwise(-col("o_totalprice"))
-      val deltas = t.groupBy(col("o_custkey"))
-        .agg(sum(contrib.cast(org.apache.spark.sql.types
-            .DecimalType(30, 6))).cast(org.apache.spark.sql.types
-            .DecimalType(38, 6)).as("spend_state"),
-          sum(when(col("type") === "INSERT", 1L)
-            .when(col("type") === "DELETE", -1L).otherwise(0L))
-            .as("n_live"))
+      val deltas = t.select(col("o_custkey"),
+        contrib.cast(DecimalType(30, 6)).cast(DecimalType(38, 6))
+          .as("spend_state"),
+        when(col("type") === "INSERT", 1L)
+          .when(col("type") === "DELETE", -1L).otherwise(0L).as("n_live"))
       val mvV = s"$mvDir/v=$batchId"
       foldVersionedState(deltas, batchId, mvDir,
         _.groupBy(col("o_custkey"))
-          .agg(sum(col("spend_state")).cast(org.apache.spark.sql.types
-              .DecimalType(38, 6)).as("spend_state"),
+          .agg(sum(col("spend_state")).cast(DecimalType(38, 6))
+              .as("spend_state"),
             sum(col("n_live")).as("n_live"))
           .filter(col("n_live") > 0))
       // 4. re-register the STABLE base root against the new MV version,
@@ -774,7 +770,8 @@ object StreamOps {
           sumMap = Map("o_totalprice" -> "spend_state"),
           countCol = "n_live",
           baseFingerprint = Some(graft.plans.PathRegistry.fileFingerprint(
-            ss.read.parquet(baseDir).inputFiles.toSeq))),
+            ss.read.schema(t.select(live: _*).schema).parquet(baseDir)
+              .inputFiles.toSeq))),
           countRows = false) // single-def base — the cost hint is unused
     } finally { t.unpersist(false); () }
   }

@@ -135,6 +135,122 @@ class CdcPropertySpec extends GraftSpec {
     }
   }
 
+  /** One change of a generated Canal history: the row image (for a
+    * DELETE, the deleted row), exact cents, and an UPDATE's old price.
+    */
+  private case class Change(id: Long, key: Long, cust: Long, cents: Long,
+      es: Long, ts: Long, kind: String, oldCents: Option[Long])
+
+  /** A consistent binlog over keys 0..23 (3 per bucket), in batches. In
+    * history order (es, ts) strictly increases, but es repeats often (so
+    * ties fall to ts) and ts restarts low whenever es moves on (so ts
+    * alone would order wrongly). Batch 0 inserts every key; batch 1
+    * changes key 5 three times at one es and deletes and re-inserts key
+    * 6 under a new customer; batch 2 touches only buckets 2 and 5;
+    * batch 3 is random over every key.
+    */
+  private def history(seed: Long): Seq[Seq[Change]] = {
+    val rnd = new scala.util.Random(seed)
+    val live = scala.collection.mutable.Map[Long, (Long, Long)]()
+    var es = 100L; var ts = 0L; var id = 0L
+    def next(key: Long, kind: String, cust: Long, cents: Long,
+        old: Option[Long], tie: Boolean = false): Change = {
+      if (!tie && rnd.nextInt(3) == 0) { es += 1; ts = rnd.nextInt(3).toLong }
+      else ts += 1
+      id += 1
+      if (kind == "DELETE") live -= key else live(key) = (cust, cents)
+      Change(id, key, cust, cents, es, ts, kind, old)
+    }
+    def price() = 1000L + rnd.nextInt(900000)
+    def random(key: Long): Change = live.get(key) match {
+      case None => next(key, "INSERT", rnd.nextInt(4).toLong, price(), None)
+      case Some((c, p)) =>
+        if (rnd.nextInt(3) > 0) next(key, "UPDATE", c, price(), Some(p))
+        else next(key, "DELETE", c, p, None)
+    }
+    def update(key: Long, tie: Boolean) = {
+      val (c, p) = live(key)
+      next(key, "UPDATE", c, price(), Some(p), tie)
+    }
+    val keys = 0L until 24L
+    val b0 = keys.map(k => next(k, "INSERT", k % 4, price(), None))
+    val b1 = Seq(update(5L, tie = false), update(5L, tie = true),
+      update(5L, tie = true)) ++ {
+      val (c, p) = live(6L)
+      val del = next(6L, "DELETE", c, p, None)
+      es += 1; ts = -2L // the re-INSERT wins on es with the lower ts
+      Seq(del, next(6L, "INSERT", (c + 1) % 4, price(), None, tie = true))
+    } ++ Seq.fill(8)(random(keys(rnd.nextInt(keys.size))))
+    val someBuckets = keys.filter(k => k % 8 == 2 || k % 8 == 5)
+    val b2 = Seq.fill(10)(random(someBuckets(rnd.nextInt(someBuckets.size))))
+    val b3 = Seq.fill(12)(random(keys(rnd.nextInt(keys.size))))
+    Seq(b0, b1, b2, b3)
+  }
+
+  test("mvMaintainBatch equals a plain-Scala model: state, live base, MV") {
+    def money(c: Long) = f"${c / 100}.${c % 100}%02d"
+    def envelopes(batch: Seq[Change], seed: Long) = {
+      import spark.implicits._
+      // arrival order inside a batch is not history order
+      val lines = new scala.util.Random(seed).shuffle(batch).map { c =>
+        val old = c.oldCents.map(o => s""","old":[{"o_totalprice":"${money(o)}"}]""")
+          .getOrElse("")
+        s"""{"id":${c.id},"database":"d","table":"orders","pkNames":["o_orderkey"],"isDdl":false,"type":"${c.kind}","es":${c.es},"ts":${c.ts},"data":[{"o_orderkey":"${c.key}","o_custkey":"${c.cust}","o_totalprice":"${money(c.cents)}"}]$old}"""
+      }
+      spark.read.schema(graft.operators.Cdc.envelopeSchema).json(lines.toDS)
+    }
+    Seq(1L, 2L).foreach { seed =>
+      val root = graft.Scratch.dir(s"graft_cdc_model_$seed")
+      val (stateDir, baseDir, mvDir) =
+        (s"$root/state", s"$root/base", s"$root/mv")
+      def versions(dir: String) = graft.Scratch.listPartitionDirs(dir, "v=")
+        .map(_.getName.drop(2).toLong)
+      def check(applied: Seq[Change], what: String): Unit = {
+        // the model: each key's last change in history order
+        val last = applied.groupBy(_.key).map(_._2.last)
+        val state = graft.streaming.StreamOps.readCdcState(spark, stateDir)
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
+            r.getLong(3), r.getString(4))).toSet
+        assert(state == last.map(c =>
+          (c.key, c.cents / 100.0, c.es, c.ts, c.kind)).toSet,
+          s"seed $seed, $what: merge state differs from the model")
+        val liveRows = last.filter(_.kind != "DELETE")
+        val base = spark.read.parquet(baseDir)
+          .select("o_orderkey", "o_custkey", "o_totalprice").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        assert(base.sortBy(_._1) == liveRows.toSeq.map(c =>
+          (c.key, c.cust, c.cents / 100.0)).sortBy(_._1),
+          s"seed $seed, $what: live base differs from the model")
+        // exact cents: longValueExact throws on any sub-cent residue
+        val mv = spark.read.parquet(s"$mvDir/v=${versions(mvDir).max}")
+          .collect().map(r => (r.getLong(0),
+            r.getDecimal(1).movePointRight(2).longValueExact(), r.getLong(2)))
+          .toSet
+        assert(mv == liveRows.groupBy(_.cust).map { case (c, rs) =>
+          (c, rs.toSeq.map(_.cents).sum, rs.size.toLong) }.toSet,
+          s"seed $seed, $what: MV differs from the model")
+      }
+      val batches = history(seed)
+      try {
+        batches.zipWithIndex.foreach { case (b, i) =>
+          graft.streaming.StreamOps.mvMaintainBatch(envelopes(b, seed + i),
+            i.toLong, stateDir, baseDir, mvDir)
+          check(batches.take(i + 1).flatten, s"batch $i")
+        }
+        // batch 2 touched buckets 2 and 5 only, and rewrote only them
+        assert(graft.Scratch.listPartitionDirs(s"$stateDir/v=2", "bucket=")
+          .map(_.getName).toSet.subsetOf(Set("bucket=2", "bucket=5")))
+        // at-least-once replay of the last batch, after its GC ran
+        val lastId = batches.size - 1L
+        assert(versions(mvDir).toSet == Set(lastId - 1, lastId))
+        graft.streaming.StreamOps.mvMaintainBatch(
+          envelopes(batches.last, seed + lastId), lastId, stateDir, baseDir,
+          mvDir)
+        check(batches.flatten, "replayed last batch")
+      } finally graft.plans.MvRouting.invalidate(baseDir)
+    }
+  }
+
   test("scd2 intervals partition each key's timeline") {
     import spark.implicits._
     samples.foreach { evs =>
