@@ -29,8 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * (epoch, partition) whose range extends past the group's committed
   * position — segment pruning and resume-from-offset are DONE AT PLAN
   * TIME inside the connector, invisible to the query. Each reader
-  * streams its segment's json files and skips records below the
-  * committed offset (a segment can straddle the position).
+  * iterates its segment's records through [[OffsetLog.segmentRecords]]
+  * and skips records below the committed offset (a segment can
+  * straddle the position).
   *
   * Scale notes: one Spark task per live (epoch, partition) segment —
   * the log's natural parallelism; planning is O(epochs × parts) driver
@@ -184,40 +185,19 @@ private case class OffsetLogInputPartition(dir: String, p: Int,
 private object OffsetLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[OffsetLogInputPartition]
+    val recs = OffsetLog.segmentRecords(part.dir)
+    // [from, until): a segment can straddle either bound (the streaming
+    // path bounds both ends per micro-batch)
+    val kept = recs.filter { case (off, _) => off >= part.from && off < part.until }
     new PartitionReader[InternalRow] {
-      private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      private val files = Option(new java.io.File(part.dir).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".json")).sortBy(_.getName).iterator
-      private var source: scala.io.Source = _ // closed per file + on close()
-      private var lines: Iterator[String] = Iterator.empty
       private var row: InternalRow = _
-
-      @scala.annotation.tailrec
-      private def advance(): Boolean =
-        if (lines.hasNext) {
-          val node = mapper.readTree(lines.next())
-          val off = node.get("offset").asLong()
-          // [from, until): a segment can straddle either bound (the
-          // streaming path bounds both ends per micro-batch)
-          if (off < part.from || off >= part.until) advance()
-          else {
-            val v = node.get("value")
-            row = InternalRow(part.p, off,
-              if (v == null || v.isNull) null
-              else UTF8String.fromString(v.asText()))
-            true
-          }
-        } else if (files.hasNext) {
-          if (source != null) source.close() // no fd leak across files
-          source = scala.io.Source.fromFile(files.next())("UTF-8")
-          lines = source.getLines().filter(_.nonEmpty)
-          advance()
-        } else false
-
-      override def next(): Boolean = advance()
+      override def next(): Boolean = kept.hasNext && {
+        val (off, v) = kept.next()
+        row = InternalRow(part.p, off, UTF8String.fromString(v))
+        true
+      }
       override def get(): InternalRow = row
-      override def close(): Unit = if (source != null) source.close()
+      override def close(): Unit = recs.close()
     }
   }
 }

@@ -1219,7 +1219,10 @@ object StreamOps {
   private[graft] val offsetLogParts = 4
   private[graft] def offsetLogDir(s: SparkSession, dir: String): String = {
     val sf = new java.io.File(dir).getName
-    val root = s"${graft.Scratch.streamStageRoot(dir)}/offset_log_$sf"
+    val stage = graft.Scratch.streamStageRoot(dir)
+    // _v2: segments changed from JSON lines to zstd parquet, so the dir
+    // name is versioned with the segment format
+    val root = s"$stage/offset_log_v2_$sf"
     // Scratch.staged, NOT an _ENDS guard: the first of the two appends
     // already writes _ENDS, so a crash between them (or two sessions
     // racing) would leave a permanently half-staged log — the marker
@@ -1232,6 +1235,8 @@ object StreamOps {
       // mkdirs keeps the marker writable even if both appends no-op
       // on an empty feed.
       graft.Scratch.deleteRecursively(new java.io.File(root))
+      // a JSON-segment log staged by an older build is never read again
+      graft.Scratch.deleteRecursively(new java.io.File(s"$stage/offset_log_$sf"))
       new java.io.File(root).mkdirs()
       val recs = Cdc.parsed(s, dir)
         .filter(col("table") === "orders" && !col("isDdl"))

@@ -544,6 +544,102 @@ class StreamSemanticsSpec extends GraftSpec {
     assert(live2 == live, "an empty batch must not disturb the state")
   }
 
+  test("offset-log append work: two jobs, zstd parquet segments, ranges from the footers") {
+    import graft.streaming.OffsetLog
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SQLExecution
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = graft.Scratch.dir("graft_offlog_work_test") + "/log"
+    def ap(epoch: Long, rows: Seq[(Int, Long)]): Unit =
+      OffsetLog.append(root, epoch,
+        rows.map { case (p, k) => (p, s"v$k", k) }.toDF("p", "value", "k"),
+        col("k"))
+    ap(0L, (0L until 9L).map(k => ((k % 3).toInt, k))) // 3 per partition 0..2
+    // the measured batch skips partition 1 and opens partition 3
+    val batch = Seq((0, 10L), (0, 11L), (2, 12L), (3, 13L), (3, 14L),
+      (3, 15L), (0, 16L))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))))
+        ()
+      }
+    }
+    org.apache.spark.TestBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ap(1L, batch)
+      org.apache.spark.TestBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the window's shuffle and the write; the ranges cost no job
+    val js = jobs.asScala.toSeq
+    assert(js.forall(_.nonEmpty),
+      s"${js.count(_.isEmpty)} of ${js.size} jobs ran outside a query")
+    assert(js.size <= 2, s"one append ran ${js.size} jobs")
+    val data = new java.io.File(s"$root/seg=1").listFiles().toSeq
+      .filter(_.isDirectory).flatMap(_.listFiles())
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    assert(data.nonEmpty && data.forall(_.getName.endsWith(".parquet")),
+      s"data files: ${data.map(_.getName)}")
+    val codecs = data.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+      finally r.close()
+    }.toSet
+    assert(codecs == Set(CompressionCodecName.ZSTD), s"codecs: $codecs")
+    // [base, base + rows) per partition: a skipped partition publishes
+    // no range, a new one starts at 0
+    val published = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"$root/_ENDS")).asScala.toSeq
+      .filter(_.startsWith("1 ")).toSet
+    assert(published == Set("1 0 3 6", "1 2 3 4", "1 3 0 3"),
+      s"epoch 1 ranges: $published")
+    assert(OffsetLog.endOffsets(root) == Map(0 -> 6L, 1 -> 3L, 2 -> 4L, 3 -> 3L))
+    val tail = OffsetLog.read(spark, root, OffsetLog.endOffsetsAt(root, 0L))
+      .as[(Int, Long, String)].collect().toSet
+    assert(tail == Set((0, 3L, "v10"), (0, 4L, "v11"), (0, 5L, "v16"),
+      (2, 3L, "v12"), (3, 0L, "v13"), (3, 1L, "v14"), (3, 2L, "v15")),
+      s"epoch 1 records: $tail")
+  }
+
+  test("offset-log append durable steps: epoch guard, crash retry, empty epoch") {
+    import graft.streaming.OffsetLog
+    import spark.implicits._
+    val root = graft.Scratch.dir("graft_offlog_durable_test") + "/log"
+    val endsFile = java.nio.file.Paths.get(s"$root/_ENDS")
+    val tailRows = (6L until 10L).map(k => (k, s"b$k"))
+    apKv(root)(0L, (0L until 6L).map(k => (k, s"a$k")))
+    val ex = intercept[IllegalArgumentException] {
+      apKv(root)(0L, Seq((6L, "x")))
+    }
+    assert(ex.getMessage.contains("already published _ENDS"), ex.getMessage)
+    apKv(root)(1L, tailRows)
+    val published = java.nio.file.Files.readString(endsFile)
+    def all() = OffsetLog.read(spark, root, Map.empty)
+      .as[(Int, Long, String)].collect().toSeq.sorted
+    val want = all()
+    // a crash between epoch 1's segment write and its _ENDS publish: the
+    // segment is on disk, the index does not name it
+    java.nio.file.Files.writeString(endsFile,
+      published.linesIterator.filterNot(_.startsWith("1 ")).mkString("\n"))
+    apKv(root)(1L, tailRows) // the retry
+    assert(java.nio.file.Files.readString(endsFile) == published,
+      "the retry must publish the same ranges")
+    assert(all() == want && want.size == 10,
+      s"the retry must give the same records, once each: ${all()}")
+    // an empty epoch leaves no segment and no _ENDS entry
+    apKv(root)(2L, Seq.empty[(Long, String)])
+    assert(!new java.io.File(s"$root/seg=2").exists())
+    assert(java.nio.file.Files.readString(endsFile) == published)
+  }
+
   test("session windows split on gaps > 30 minutes") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
