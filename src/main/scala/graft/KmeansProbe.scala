@@ -26,7 +26,7 @@ object KmeansProbe {
         .repartition(32).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       x.count(); x
     }
-    var cents: IndexedSeq[Seq[Double]] = t("seed collect") {
+    val cents: IndexedSeq[Seq[Double]] = t("seed collect") {
       e.filter(col("vec_id") < 8).orderBy(col("vec_id")).select(col("v"))
         .collect().map(_.getSeq[Double](0).toIndexedSeq: Seq[Double]).toIndexedSeq
     }

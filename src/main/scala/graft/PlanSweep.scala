@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan-pattern sweep (not part of the driver contract): prints every
   * registered key whose PHYSICAL plan matches a regex — the tool behind
   * structural invariants like AllQueriesSmokeSpec's CartesianProduct ban

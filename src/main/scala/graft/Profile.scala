@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness (not part of the driver contract): runs the named
   * queries (or all) twice in one JVM and reports cold vs warm wall-clock,
   * separating JIT/session warm-up from steady-state cost. Usage:

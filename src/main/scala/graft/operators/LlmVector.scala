@@ -31,9 +31,6 @@ object LlmVector {
   private def norm2(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm2(a) * norm2(b))
-
   /** The sim-family per-probe ranking discipline in ONE place: rank by
     * (6dp-rounded score, cand_id) and keep the top k — previously
     * copy-pasted at nine probe-broadcast sites, where a tie-break or

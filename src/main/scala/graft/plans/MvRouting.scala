@@ -1052,7 +1052,7 @@ object RouteAggregateToMv extends Rule[LogicalPlan] with PredicateHelper {
     def go(q: LogicalPlan): Option[(Seq[Expression],
         Map[ExprId, Expression], HadoopFsRelation, Seq[LogicalPlan],
         Seq[Expression])] = q match {
-      case j @ Join(l, r, Inner, Some(cond), _) =>
+      case Join(l, r, Inner, Some(cond), _) =>
         val conds = splitConjunctivePredicates(cond)
         def asFact(side: LogicalPlan, sibling: LogicalPlan) =
           baseScan(side).collect {

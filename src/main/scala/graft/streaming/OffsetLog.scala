@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -125,7 +126,9 @@ object OffsetLog {
       .parquet(segDir.getPath)
     // row_number numbers each partition's records 1..n, so the ranges
     // are [base, base + rows), with the rows read from the footers
-    val rows = footerRows(records.sparkSession, segDir)
+    val rows = partDirs(segDir).map { d =>
+      d.getName.stripPrefix("p=").toInt -> footerRows(records.sparkSession, d)
+    }.toMap
     if (rows.isEmpty) {
       // empty epoch: drop the seg dir the write left and publish nothing
       graft.Scratch.deleteRecursively(segDir)
@@ -139,18 +142,21 @@ object OffsetLog {
     atomicWrite(endsFile(root), lines.mkString("\n"))
   }
 
-  /** Rows per partition of a parquet segment, summed from its files'
-    * footers — O(files) driver metadata, no Spark job.
+  /** Rows of one dir's parquet files, summed from their footers —
+    * O(files) driver metadata, no Spark job. The CDC state's compaction
+    * rule sizes its bucket dirs with it too.
     */
-  private def footerRows(s: SparkSession, segDir: File): Map[Int, Long] = {
+  private[graft] def footerRows(s: SparkSession, dir: File): Long = {
     val conf = s.sparkContext.hadoopConfiguration
-    partDirs(segDir).map { d =>
-      d.getName.stripPrefix("p=").toInt -> dataFiles(d).map { f =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.toURI), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }.toMap
+    // options built once, without a file path: built from each file's
+    // path they look up its decryption properties first, ≈10 ms a file
+    // against under 1 ms for the open alone
+    val opts = HadoopReadOptions.builder(conf).build()
+    dataFiles(dir).map { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f.toURI), conf), opts)
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   private def partDirs(segDir: File): Seq[File] =

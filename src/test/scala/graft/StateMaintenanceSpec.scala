@@ -383,6 +383,7 @@ class StateMaintenanceSpec extends GraftSpec {
     val stateDir = s"$root/merge_state"
     val baseDir = s"$root/smm_base"
     val mvDir = s"$root/smm_mv"
+    val (partsBase, partsMv) = (s"$root/parts_base", s"$root/parts_mv")
     def env(rows: Seq[(Long, Long, Double, Long, String, Option[Double])]) = {
       import spark.implicits._
       val lines = rows.map { case (k, c, p, es, t, old) =>
@@ -435,18 +436,22 @@ class StateMaintenanceSpec extends GraftSpec {
         (17L, 1L, 117.0, 20L, "DELETE", None),
         (34L, 2L, 340.0, 21L, "INSERT", None),
         (8L, 0L, 555.0, 22L, "UPDATE", Some(999.0))))
-      org.apache.spark.TestBridge.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.addSparkListener(jobListener)
-      spark.listenerManager.register(writeListener)
-      try {
-        StreamOps.mvMaintainBatch(b1, 1L, stateDir, baseDir, mvDir)
+      def measured(body: => Unit): Unit = {
+        jobs.clear(); writes.clear()
         org.apache.spark.TestBridge.drainListenerBus(spark.sparkContext)
-      } finally {
-        spark.sparkContext.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(writeListener)
+        spark.sparkContext.addSparkListener(jobListener)
+        spark.listenerManager.register(writeListener)
+        try {
+          body
+          org.apache.spark.TestBridge.drainListenerBus(spark.sparkContext)
+        } finally {
+          spark.sparkContext.removeSparkListener(jobListener)
+          spark.listenerManager.unregister(writeListener)
+        }
       }
+      measured(StreamOps.mvMaintainBatch(b1, 1L, stateDir, baseDir, mvDir))
       import scala.jdk.CollectionConverters._
-      val written = writes.asScala.toSeq
+      def written = writes.asScala.toSeq
       def writeTo(dir: String) = {
         val w = written.filter(_._1.endsWith(dir))
         assert(w.size == 1, s"expected one write to $dir, saw ${written.map(_._1)}")
@@ -473,17 +478,50 @@ class StateMaintenanceSpec extends GraftSpec {
       // count stays at its ceiling: the touched-bucket probe 3 (batch
       // cache, shuffle, result), the merge 3 (shuffle, merge cache,
       // write), the base publish 1, the MV fold 2 (shuffle, write)
-      val js = jobs.asScala.toSeq
-      assert(js.forall(_.nonEmpty),
-        s"${js.count(_.isEmpty)} of ${js.size} jobs ran outside a query")
-      assert(js.size <= 9, s"one mvMaintainBatch ran ${js.size} jobs")
+      def checkJobs(): Unit = {
+        val js = jobs.asScala.toSeq
+        assert(js.forall(_.nonEmpty),
+          s"${js.count(_.isEmpty)} of ${js.size} jobs ran outside a query")
+        assert(js.size <= 9, s"one mvMaintainBatch ran ${js.size} jobs")
+      }
+      checkJobs()
       // and the batch's answer is right
       val liveBase = spark.read.parquet(baseDir)
         .select("o_orderkey", "o_totalprice").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(liveBase.size == 32 && liveBase(8L) == 555.0 &&
         liveBase(34L) == 340.0 && !liveBase.contains(17L))
-    } finally graft.plans.MvRouting.invalidate(baseDir)
+      // with parts live: 100 orders per bucket, then five batches that
+      // each change one order per bucket leave every bucket a base and
+      // five parts — 48 bucket dirs in 6 version dirs. The measured
+      // batch reads them all; passed as bucket dirs (over 32 paths) the
+      // read would start Spark's parallel listing job, outside a query
+      val partsDir = s"$root/parts_state"
+      val upd = (b: Long) => env((0L until 8L).map(k =>
+        (8 * b + k, k % 4, 1000.0 * b + k, 10L + b, "UPDATE",
+          Some(100.0 + 8 * b + k): Option[Double])))
+      StreamOps.mvMaintainBatch(env((0L until 800L).map(k =>
+        (k, k % 4, 100.0 + k, 10L, "INSERT", None: Option[Double]))),
+        0L, partsDir, partsBase, partsMv)
+      (1L to 5L).foreach(b =>
+        StreamOps.mvMaintainBatch(upd(b), b, partsDir, partsBase, partsMv))
+      def bucketDirsBelow(v: Long) = (0L until v).map(i =>
+        bucketDirs(s"$partsDir/v=$i").size).sum
+      assert(bucketDirsBelow(6L) == 48, "every bucket has a base and 5 parts")
+      measured(StreamOps.mvMaintainBatch(upd(6L), 6L, partsDir, partsBase, partsMv))
+      assert(shuffles(writeTo("/parts_state/v=6"), intoCache = true) == 1)
+      checkJobs()
+      // the batch wrote 8 one-row parts, no base
+      assert(bucketDirs(s"$partsDir/v=6").size == 8 &&
+        (0 until 8).forall(b => !new java.io.File(
+          s"$partsDir/v=6/bucket=$b/${StreamOps.cdcBaseMarker}").exists()))
+      assert(spark.read.parquet(s"$partsDir/v=6").count() == 8)
+      val liveParts = spark.read.parquet(partsBase)
+        .select("o_orderkey", "o_totalprice").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(liveParts.size == 800 && liveParts(50L) == 6002.0 &&
+        liveParts(8L) == 1000.0 && liveParts(47L) == 5007.0 && liveParts(7L) == 107.0)
+    } finally Seq(baseDir, partsBase).foreach(graft.plans.MvRouting.invalidate)
   }
 
   test("mvMaintainBatch crash window: torn publish never serves a stale MV") {
@@ -621,6 +659,183 @@ class StateMaintenanceSpec extends GraftSpec {
       .select("o_orderkey", "o_totalprice").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(m(0L) == 1000.0 && m(7L) == 907.0 && m.size == 8)
+  }
+
+  /** The merge state as key → (price, es, ts, type), read back. */
+  private def cdcState(state: String): Map[Long, (Double, Long, Long, String)] =
+    StreamOps.readCdcState(spark, state).collect().map(r =>
+      r.getLong(0) -> ((r.getDouble(1), r.getLong(2), r.getLong(3), r.getString(4))))
+      .toMap
+
+  /** The bucket dirs one version wrote, split into (parts, bases). */
+  private def partsAndBases(state: String, v: Long): (Set[Int], Set[Int]) =
+    graft.Scratch.listPartitionDirs(s"$state/v=$v", "bucket=").toSet
+      .partition(d => !new java.io.File(d, StreamOps.cdcBaseMarker).exists()) match {
+      case (p, b) => (p.map(_.getName.drop(7).toInt), b.map(_.getName.drop(7).toInt))
+    }
+
+  private def versionCount(state: String): Int =
+    graft.Scratch.listPartitionDirs(state, "v=").length
+
+  test("CDC merge: an (es, ts) tie goes to the later batch, then to the row columns") {
+    def price(state: String) = StreamOps.readCdcState(spark, state)
+      .filter(col("o_orderkey") === 41L).select("o_totalprice").collect()
+      .map(_.getDouble(0)).toSeq
+    val conf = spark.conf.get("spark.sql.shuffle.partitions")
+    // alone, key 41's bucket compacts on every batch; among 80 other
+    // keys it takes parts, so the read settles the tie as well
+    try for (n <- Seq("2", "7"); others <- Seq(0L, 80L)) {
+      spark.conf.set("spark.sql.shuffle.partitions", n)
+      val rest = (0L until others).filter(_ != 41L)
+        .map(k => (k, 100.0 + k, 1L, 1L, "INSERT"))
+      for ((a, b) <- Seq((10.0, 20.0), (20.0, 10.0))) {
+        val state = java.nio.file.Files
+          .createTempDirectory("graft_cdc_tie_test").toString
+        StreamOps.mergeCdcTyped(typed(rest :+ ((41L, a, 5L, 5L, "INSERT"))), 0L, state)
+        StreamOps.mergeCdcTyped(typed(Seq((41L, b, 5L, 5L, "UPDATE"))), 1L, state)
+        assert(price(state) == Seq(b),
+          s"a tie with the state must go to the later batch ($n partitions, $others other keys)")
+        assert(partsAndBases(state, 1L)._1 == (if (others == 0L) Set() else Set(1)))
+        // two tied rows in one batch, in both arrival orders (a replay
+        // of batch 2 reads the same inputs)
+        val tied = Seq((41L, 30.0, 6L, 6L, "UPDATE"), (41L, 40.0, 6L, 6L, "UPDATE"))
+        val won = Seq(tied, tied.reverse).map { rows =>
+          StreamOps.mergeCdcTyped(typed(rows), 2L, state)
+          price(state)
+        }
+        assert(won == Seq(Seq(40.0), Seq(40.0)),
+          s"a tie inside one batch must not depend on arrival order: $won " +
+            s"($n partitions, $others other keys)")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", conf)
+  }
+
+  test("CDC parts: live version dirs stay bounded over a long run; state exact") {
+    val state = java.nio.file.Files
+      .createTempDirectory("graft_cdc_parts_loop_test").toString
+    val rnd = new scala.util.Random(5)
+    val keys = 2000L
+    val model = scala.collection.mutable.Map[Long, (Double, Long, Long, String)]()
+    def apply(rows: Seq[(Long, Double, Long, Long, String)], b: Long): Unit = {
+      StreamOps.mergeCdcTyped(typed(rows), b, state)
+      rows.foreach { case (k, p, es, ts, t) => model(k) = (p, es, ts, t) }
+    }
+    apply((0L until keys).map(k => (k, 100.0 + k, 1L, 1L, "INSERT")), 0L)
+    var parts, bases = 0
+    (1L to 40L).foreach { b =>
+      // mostly small batches over every bucket, a large one every tenth
+      // batch, and a one-bucket batch every seventh
+      val ks =
+        if (b % 10 == 0) Seq.fill(1200)(rnd.nextLong(keys))
+        else if (b % 7 == 0) Seq.fill(3)(rnd.nextLong(keys / 8) * 8 + b % 8)
+        else Seq.fill(16 + rnd.nextInt(64))(rnd.nextLong(keys))
+      apply(ks.distinct.map(k =>
+        (k, b * 10000.0 + k, b + 1, 1L, if (k % 5 == 0) "DELETE" else "UPDATE")), b)
+      val (p, bs) = partsAndBases(state, b)
+      parts += p.size; bases += bs.size
+      assert(versionCount(state) <=
+        StreamOps.cdcStateBuckets + StreamOps.cdcMaxParts + 2,
+        s"batch $b left ${versionCount(state)} version dirs")
+    }
+    assert(parts > 0 && bases > 0, s"$parts parts and $bases bases written")
+    assert(cdcState(state) == model, "state differs from the model")
+  }
+
+  test("readCdcState: a key filter goes below the latest-per-key window") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Window => WindowNode}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val state = java.nio.file.Files
+      .createTempDirectory("graft_cdc_lookup_test").toString
+    StreamOps.mergeCdcTyped(
+      typed((0L until 80L).map(k => (k, 100.0 + k, 1L, 1L, "INSERT"))), 0L, state)
+    StreamOps.mergeCdcTyped(typed(Seq((17L, 999.0, 2L, 1L, "UPDATE"))), 1L, state)
+    assert(partsAndBases(state, 1L) == ((Set(1), Set())), "bucket 1 took a part")
+    val df = StreamOps.readCdcState(spark, state).filter(col("o_orderkey") === 17L)
+    def onKey(f: Filter) = f.condition.references.exists(_.name == "o_orderkey")
+    val plan = df.queryExecution.optimizedPlan
+    val windows = plan.collect { case w: WindowNode => w }
+    assert(windows.size == 1, s"one window expected:\n$plan")
+    assert(windows.head.child.exists { case f: Filter => onKey(f); case _ => false },
+      s"the key filter must sit below the window:\n$plan")
+    assert(!plan.exists {
+      case f: Filter => onKey(f) && f.child.exists(_.isInstanceOf[WindowNode])
+      case _ => false
+    }, s"no key filter may stay above the window:\n$plan")
+    assert(df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+      .exists(_.dataFilters.exists(_.references.exists(_.name == "o_orderkey"))),
+      "the key filter must reach the scan")
+    assert(df.select("o_totalprice").collect().map(_.getDouble(0)).toSeq == Seq(999.0))
+  }
+
+  test("CDC parts durable steps: an unmarked base reads right and supersedes nothing") {
+    val state = java.nio.file.Files
+      .createTempDirectory("graft_cdc_marker_test").toString
+    val model = scala.collection.mutable.Map[Long, Double]()
+    def apply(rows: Seq[(Long, Double, Long, Long, String)], b: Long): Unit = {
+      StreamOps.mergeCdcTyped(typed(rows), b, state)
+      rows.foreach { case (k, p, _, _, _) => model(k) = p }
+    }
+    def prices() = cdcState(state).map { case (k, v) => k -> v._1 }
+    // 10 keys per bucket; batch 1 writes a part to bucket 1, batch 2
+    // compacts bucket 1 (3 + 2 of its 10 rows changed) and parts bucket 2
+    apply((0L until 80L).map(k => (k, 100.0 + k, 1L, 1L, "INSERT")), 0L)
+    apply(Seq(1L, 9L).map(k => (k, 200.0 + k, 2L, 1L, "UPDATE")), 1L)
+    val b2 = Seq(17L, 25L, 33L, 2L).map(k => (k, 300.0 + k, 3L, 1L, "UPDATE"))
+    apply(b2, 2L)
+    assert(partsAndBases(state, 1L) == ((Set(1), Set())))
+    assert(partsAndBases(state, 2L) == ((Set(2), Set(1))))
+    // the crash: bucket 1's new base is written, its marker is not
+    val marker = new java.io.File(s"$state/v=2/bucket=1/${StreamOps.cdcBaseMarker}")
+    assert(marker.delete())
+    assert(prices() == model, "an unmarked base must read as a part")
+    // GC must not count it: v=1 (bucket 1's part) is still needed
+    assert(StreamOps.gcCdcVersions(state, 3L).isEmpty)
+    assert(new java.io.File(s"$state/v=1").isDirectory)
+    // the replay of batch 2 marks the base; the next GC collects v=1
+    apply(b2, 2L)
+    assert(marker.exists())
+    assert(StreamOps.gcCdcVersions(state, 3L) == Seq(1L))
+    assert(prices() == model)
+    // a merge over the unmarked state compacts bucket 1 again and stays exact
+    assert(marker.delete())
+    apply(Seq((41L, 400.0, 4L, 1L, "UPDATE")), 3L)
+    assert(partsAndBases(state, 3L) == ((Set(), Set(1))))
+    assert(prices() == model)
+  }
+
+  test("CDC parts durable steps: a torn txn staging of parts is swept; replay converges") {
+    val root = graft.Scratch.dir("graft_cdc_txn_parts_test")
+    val (a, b) = (s"$root/a", s"$root/b")
+    val batches = Seq(
+      (0L until 80L).map(k => (k, 100.0 + k, 1L, 1L, "INSERT")),
+      Seq(3L, 12L).map(k => (k, 200.0 + k, 2L, 1L, "UPDATE")),
+      Seq((5L, 0.0, 3L, 1L, "DELETE"), (22L, 322.0, 3L, 1L, "UPDATE"),
+        (80L, 380.0, 3L, 1L, "INSERT")))
+    val ends = Seq(80L, 82L, 85L)
+    def run(state: String, i: Int): Unit = StreamOps.mergeCdcTypedTxn(
+      typed(batches(i)), i.toLong, state, Some(Map(0 -> ends(i))))
+    (0 to 2).foreach(run(b, _))
+    (0 to 1).foreach(run(a, _))
+    val committed = cdcState(a)
+    // the crash: batch 2 staged its parts but never wrote its position
+    // or renamed the staging dir
+    val staging = new java.io.File(s"$a/.txn_v=2")
+    graft.Scratch.cloneTree(s"$b/v=2", staging.getPath)
+    assert(new java.io.File(staging, "_offsets").delete())
+    val staged = graft.Scratch.listPartitionDirs(staging.getPath, "bucket=")
+    assert(staged.nonEmpty && staged.forall(d =>
+      !new java.io.File(d, StreamOps.cdcBaseMarker).exists()),
+      "the torn staging holds parts")
+    assert(StreamOps.txnCommittedOffsets(a) == Map(0 -> 82L))
+    assert(cdcState(a) == committed, "the staging must stay invisible")
+    run(a, 2)
+    assert(!staging.exists(), "the replay must sweep the torn staging")
+    assert(StreamOps.txnCommittedOffsets(a) == Map(0 -> 85L))
+    assert(StreamOps.txnCommittedOffsets(a) == StreamOps.txnCommittedOffsets(b))
+    assert(cdcState(a) == cdcState(b), "the replay must converge to the uninterrupted state")
+    val live = cdcState(a).filter(_._2._4 != "DELETE").map { case (k, v) => k -> v._1 }
+    assert(live.size == 80 && live(22L) == 322.0 && live(80L) == 380.0 &&
+      live(3L) == 203.0 && !live.contains(5L))
   }
 
   test("summing-state MV folds deltas across batches; replay + GC safe") {
