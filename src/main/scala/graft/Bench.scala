@@ -20,10 +20,8 @@ object Bench {
     // previous run's at-rest per-query map AND calibration record, read
     // ONCE and BEFORE overwrite: the standing regression guard diffs
     // against them at the end of the run
-    val prevRaw = readAll("target/bench_queries.json")
-    val prev = parsePrevQueries(prevRaw)
-    val prevCal = parseCalibration(prevRaw)
-    val prevCalIo = parseCalibrationIo(prevRaw)
+    val Prior(prev, prevCal, prevCalIo) =
+      parsePrior(readAll("target/bench_queries.json"))
     // one-time shared-fixture ETL (bucketed tables, staged stream feeds):
     // amortized setup at cluster scale, so it isn't part of any query's time
     // a fixture-prep failure must be VISIBLE (it cascades into dozens of
@@ -129,9 +127,11 @@ object Bench {
     // on pure min-vs-single sampling — the mixing the baseline
     // semantics note above promises never happens
     if (only.isEmpty && reps == 1 && adopt) {
+      // published atomically: the next run reads it as its baseline, and
+      // a torn write would silently read as "no baseline"
       try {
         new java.io.File("target").mkdirs()
-        java.nio.file.Files.writeString(
+        Scratch.atomicPublish(
           java.nio.file.Paths.get("target/bench_queries.json"), line)
       } catch {
         // warn, don't swallow silently: a stale file from a previous run
@@ -324,65 +324,37 @@ object Bench {
     } finally Scratch.deleteRecursively(dir.toFile)
   }
 
-  /** The prior run's `"calibration":<sec>` record; 0.0 (guard
-    * unnormalized) when missing or garbled. Path overload for tests.
+  /** The prior run's at-rest record, read ONCE: its per-query map and
+    * its `calibration` / `calibration_io` probe seconds. A missing or
+    * garbled record, or a field absent from it, disables that part of
+    * the guard: an empty map, 0.0 (guard unnormalized).
     */
-  private[graft] def readPrevCalibration(path: String): Double =
-    parseCalibration(readAll(path))
+  private[graft] case class Prior(queries: Map[String, Double],
+      calibration: Double, calibrationIo: Double)
 
-  private[graft] def parseCalibration(s: String): Double =
-    parseNumField(s, "calibration")
-
-  private[graft] def parseCalibrationIo(s: String): Double =
-    parseNumField(s, "calibration_io")
-
-  /** `"<field>":<number>` extractor over the baseline line; 0.0 when
-    * absent/garbled. The search key includes the closing quote+colon,
-    * so `calibration` never matches the longer `calibration_io` record.
-    */
-  private def parseNumField(s: String, field: String): Double =
+  private[graft] def parsePrior(s: String): Prior =
     try {
-      val key = "\"" + field + "\":"
-      val i = s.indexOf(key)
-      if (i < 0) 0.0
-      else {
-        val rest = s.substring(i + key.length)
-        val end = rest.indexWhere(c => !(c.isDigit || c == '.' ||
-          c == '-' || c == 'e' || c == 'E' || c == '+'))
-        (if (end < 0) rest else rest.substring(0, end)).toDouble
-      }
-    } catch { case scala.util.control.NonFatal(_) => 0.0 }
+      import scala.jdk.CollectionConverters._
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+      def num(f: String) = Option(n.get(f)).filter(_.isNumber).fold(0.0)(_.asDouble)
+      Prior(n.path("queries").properties().asScala.collect {
+          case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+        }.toMap, num("calibration"), num("calibration_io"))
+    } catch { case scala.util.control.NonFatal(_) => Prior(Map.empty, 0.0, 0.0) }
+
+  // path and field overloads for the unit tests
+  private[graft] def readPrev(path: String): Map[String, Double] =
+    parsePrior(readAll(path)).queries
+  private[graft] def readPrevCalibration(path: String): Double =
+    parsePrior(readAll(path)).calibration
+  private[graft] def parseCalibration(s: String): Double = parsePrior(s).calibration
+  private[graft] def parseCalibrationIo(s: String): Double = parsePrior(s).calibrationIo
 
   /** The prior baseline file's raw content; "" when missing/unreadable
-    * (both parsers treat "" as guard-disabled). One read, two parsers —
-    * the main loop reads the file ONCE and feeds both.
+    * (the parse treats "" as guard-disabled).
     */
   private def readAll(path: String): String =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
     catch { case scala.util.control.NonFatal(_) => "" }
-
-  /** Best-effort parse of the prior run's `{"queries":{k:v,...}}` line;
-    * a missing/garbled file just disables the guard for this run.
-    * Path overload kept for the unit tests.
-    */
-  private[graft] def readPrev(path: String): Map[String, Double] =
-    parsePrevQueries(readAll(path))
-
-  private[graft] def parsePrevQueries(s: String): Map[String, Double] =
-    try {
-      val qStart = s.indexOf("\"queries\":{")
-      if (qStart < 0) Map.empty
-      else {
-        val body = s.substring(qStart + 11, s.indexOf('}', qStart))
-        body.split(',').iterator.flatMap { kv =>
-          kv.split(':') match {
-            case Array(k, v) =>
-              try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
 }

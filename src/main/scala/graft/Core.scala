@@ -504,6 +504,46 @@ object Scratch {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     fsyncDir(path.getParent)
   }
+
+  /** THE directory publish (a replayed version, a rewritten partition, a
+    * rebuilt layout): a target left by an earlier run is deleted, then
+    * ONE ATOMIC_MOVE puts the staged dir in its place and the parent is
+    * fsync'd so the rename survives power loss. The delete and the move
+    * are two steps: a crash between them leaves no target.
+    */
+  def publishDir(staged: java.nio.file.Path, target: java.nio.file.Path): Unit = {
+    deleteRecursively(target.toFile)
+    java.nio.file.Files.move(staged, target,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    fsyncDir(target.toAbsolutePath.getParent)
+  }
+
+  /** THE directory claim: the publish's move into a slot that must be
+    * free — the rename doubles as a compare-and-swap. A taken slot means
+    * another writer won: the staging is swept and the claim returns
+    * false. Any other I/O error propagates with the staging left as is.
+    */
+  def claimDir(staged: java.nio.file.Path, slot: java.nio.file.Path): Boolean = {
+    val won = !java.nio.file.Files.exists(slot) &&
+      (try {
+        java.nio.file.Files.move(staged, slot,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        true
+      } catch {
+        // ONLY a taken slot is a lost race. Linux surfaces ENOTEMPTY as
+        // a GENERIC FileSystemException (not the
+        // DirectoryNotEmptyException subclass), so discriminate by
+        // state, not exception type: conflict iff another writer now
+        // owns the slot. Anything else (ENOSPC, EACCES, …) is a real
+        // I/O failure and must propagate, not masquerade as a conflict
+        // with the staged data silently swept.
+        case _: java.nio.file.FileSystemException
+            if java.nio.file.Files.exists(slot) => false
+      })
+    if (won) fsyncDir(slot.toAbsolutePath.getParent)
+    else deleteRecursively(staged.toFile)
+    won
+  }
 }
 
 object Json {
@@ -525,8 +565,8 @@ object Json {
 }
 
 object Sessions {
-  /** The ONE local harness session builder (Verify/Bench/PlanSweep/
-    * Profile had four hand-copies whose CPUS defaults had already
+  /** The ONE local harness session builder (the Verify, Bench and dev
+    * mains had four hand-copies whose CPUS defaults had already
     * drifted): local[cpus] with shuffle partitions = cpus, UTC session
     * timezone (the oracle gate's timezone — every main must run the
     * exact computation the gate verified), UI off, and a generated-class

@@ -2782,8 +2782,7 @@ object MvOps {
       val staged = s"${p}_staged"
       s.read.parquet(p).filter(col("user_id") % 10 =!= 3)
         .write.parquet(staged)
-      graft.Scratch.deleteRecursively(new java.io.File(p))
-      java.nio.file.Files.move(java.nio.file.Paths.get(staged),
+      graft.Scratch.publishDir(java.nio.file.Paths.get(staged),
         java.nio.file.Paths.get(p))
     }
     // the rebuild's final step: RE-REGISTER on the mutated file set.

@@ -1024,14 +1024,13 @@ object Scans {
     // change between rounds — memory/FIXTURES.md): detach the
     // min(7, days) oldest, reattach the oldest, never assume 8+ days
     val toDetach = days.take(7)
-    toDetach.foreach { d =>
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$root/$d"),
-        java.nio.file.Paths.get(s"$det/$d"))
-    }
+    def move(from: String, to: String): Unit = require(graft.Scratch.claimDir(
+      java.nio.file.Paths.get(from), java.nio.file.Paths.get(to)),
+      s"partition slot $to is taken")
+    toDetach.foreach(d => move(s"$root/$d", s"$det/$d"))
     // ATTACH the oldest back
     val reattached = toDetach.head
-    java.nio.file.Files.move(java.nio.file.Paths.get(s"$det/$reattached"),
-      java.nio.file.Paths.get(s"$root/$reattached"))
+    move(s"$det/$reattached", s"$root/$reattached")
     val reDay = java.sql.Date.valueOf(reattached.drop(4))
     val visible = s.read.parquet(root)
       .groupBy(col("day")).agg(count(lit(1)).as("n_visible"))
@@ -1079,8 +1078,9 @@ object Scans {
     val (moved, _) = dayPartitionCutoff(hot, 14)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cold))
     moved.foreach { d =>
-      java.nio.file.Files.move(d.toPath,
-        java.nio.file.Paths.get(s"$cold/${d.getName}"))
+      require(graft.Scratch.claimDir(d.toPath,
+        java.nio.file.Paths.get(s"$cold/${d.getName}")),
+        s"cold slot ${d.getName} is taken")
     }
     val hotDf = s.read.parquet(hot).withColumn("tier", lit("hot"))
     // a ≤15-day drop moves nothing; parquet cannot infer a schema from
@@ -1122,8 +1122,8 @@ object Scans {
     def fileState(): Map[String, Seq[(String, String)]] =
       partFileShas(Seq(new java.io.File(root)))
     val before = fileState()
-    // the "ALTER": one durable manifest write, zero data I/O
-    graft.Scratch.writeDurable(
+    // the "ALTER": one atomic manifest publish, zero data I/O
+    graft.Scratch.atomicPublish(
       java.nio.file.Paths.get(s"$base/_SCHEMA"),
       """{"renames":{"o_totalprice":"o_amount"}}""")
     val after = fileState()
@@ -1173,9 +1173,10 @@ object Scans {
         .map(_.getName.drop(7).toInt).toSet
       localOk &&= outs.subsetOf(Set(b, b + 4))
       outs.foreach { k =>
-        java.nio.file.Files.move(
+        require(graft.Scratch.claimDir(
           java.nio.file.Paths.get(s"$stage/bucket=$k"),
-          java.nio.file.Paths.get(s"$newRoot/bucket=$k"))
+          java.nio.file.Paths.get(s"$newRoot/bucket=$k")),
+          s"bucket slot $k is taken")
       }
     }
     val resharded = s.read.parquet(newRoot)
@@ -1193,9 +1194,9 @@ object Scans {
   /** Optimistic concurrency on the versioned store — the Delta/Iceberg
     * commit protocol expressed on plain dirs: a writer stages its new
     * version invisibly (`.txn_*`), then COMMITS with one atomic
-    * same-directory rename to `v=<next>`; the rename doubles as the
-    * CAS — if another writer committed that version first the rename
-    * throws (target exists), the loser REBASES on the winner's version
+    * same-directory rename to `v=<next>` ([[graft.Scratch.claimDir]]);
+    * the rename doubles as the CAS — if another writer committed that
+    * version first the claim fails, the loser REBASES on the winner's version
     * and retries as v+1. Two deliberately concurrent writers here: A
     * (urgent-order surcharge) wins v=1; B (drop F-status rows) loses
     * the CAS, rebases on v=1, lands as v=2. Final state ≡ A then B
@@ -1219,26 +1220,9 @@ object Scans {
     def commit(version: Int, df: DataFrame): Boolean = {
       val txn = s"$base/.txn_${version}_${System.nanoTime()}"
       df.write.parquet(txn)
-      try {
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(txn),
-          java.nio.file.Paths.get(s"$store/v=$version"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        true
-      } catch {
-        // ONLY a taken version slot is a lost CAS. Linux surfaces
-        // ENOTEMPTY as a GENERIC FileSystemException (not the
-        // DirectoryNotEmptyException subclass), so discriminate by
-        // state, not exception type: conflict iff another writer now
-        // owns the target dir. Anything else (ENOSPC, EACCES, …) is a
-        // real I/O failure and must propagate, not masquerade as a
-        // conflict with the staged data silently swept.
-        case _: java.nio.file.FileSystemException
-            if new java.io.File(s"$store/v=$version").exists() =>
-          // lost the CAS: sweep the orphaned staging dir, caller rebases
-          graft.Scratch.deleteRecursively(new java.io.File(txn))
-          false
-      }
+      // a lost CAS sweeps the staging dir; the caller rebases
+      graft.Scratch.claimDir(java.nio.file.Paths.get(txn),
+        java.nio.file.Paths.get(s"$store/v=$version"))
     }
     def transformA(v: DataFrame): DataFrame =
       v.withColumn("o_totalprice",
@@ -1295,8 +1279,8 @@ object Scans {
         .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
     val before = partBytes()
     val sizeBeforeF = partSize("o_orderstatus=F")
-    // the "ALTER": one durable manifest write, zero data I/O
-    graft.Scratch.writeDurable(
+    // the "ALTER": one atomic manifest publish, zero data I/O
+    graft.Scratch.atomicPublish(
       java.nio.file.Paths.get(s"$base/_SCHEMA"),
       """{"dropped":["o_totalprice"]}""")
     // lazy reclamation: the next merge of partition F rewrites it
@@ -1489,11 +1473,10 @@ object Scans {
         .parquet(touched.map(_.getPath).toIndexedSeq: _*))
       .write.partitionBy(partCol).parquet(staged)
     touched.foreach { d =>
-      graft.Scratch.deleteRecursively(d)
       val src = java.nio.file.Paths.get(s"$staged/${d.getName}")
       // fully-deleted partition: no staged dir → the partition is dropped
-      if (java.nio.file.Files.exists(src))
-        java.nio.file.Files.move(src, d.toPath)
+      if (java.nio.file.Files.exists(src)) graft.Scratch.publishDir(src, d.toPath)
+      else graft.Scratch.deleteRecursively(d)
     }
     // parts_done counts the same universe as parts_total (non-null
     // partitions), so done <= total holds even when the admit lambda
@@ -1715,7 +1698,7 @@ object Scans {
 
   /** ClickHouse `ALTER TABLE ... MODIFY COLUMN value Int64` — the TYPE
     * CHANGE mutation, the missing sibling of MATERIALIZE COLUMN: the
-    * ALTER itself is one durable manifest write (zero data I/O); from
+    * ALTER itself is one atomic manifest publish (zero data I/O); from
     * that instant the column IS the new type everywhere, served
     * VIRTUALLY (the conversion computed at read time) by parts written
     * before the ALTER, and physically by parts rewritten since. Chosen
@@ -1768,8 +1751,8 @@ object Scans {
       partFileShas(allDayDirs().filter(f => isCold(f.getName.drop(4)))
         .toIndexedSeq)
     val before = coldSha()
-    // the ALTER: one durable manifest write, zero data I/O
-    graft.Scratch.writeDurable(
+    // the ALTER: one atomic manifest publish, zero data I/O
+    graft.Scratch.atomicPublish(
       java.nio.file.Paths.get(s"$base/_SCHEMA"),
       """{"modify":{"value":{"type":"bigint","conv":"floor"}}}""")
     // MODIFY COLUMN ... IN PARTITION day < cut: materialize the change

@@ -1,11 +1,12 @@
 package graft.plans
 
 import graft.functions.CosineSim
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Round}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.IntegerType
 
 /** The public extension surface (SURVEY.md §4 stretch): a
@@ -13,7 +14,8 @@ import org.apache.spark.sql.types.IntegerType
   *   - the native [[CosineSim]] expression as SQL function
   *     `cosine_sim_native` (via injectFunction — the supported API,
   *     vs. the internal registry call used for ad-hoc registration), and
-  *   - [[CollapseRedundantRound]], a small optimizer rule.
+  *   - [[CollapseRedundantRound]], a small optimizer rule, and
+  *   - the [[GraftRules]] list.
   *
   * Enable with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
@@ -32,18 +34,37 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       },
     ))
     ext.injectOptimizerRule(_ => CollapseRedundantRound)
-    // the same rule/strategy set that operators install at runtime via
-    // experimental.* — extension-configured sessions get them statically.
-    // ALL transparent rules ride along, each inert until its own gate
-    // opens: the three routing rules are SESSION-gated (their EnabledKey
-    // conf — registry-gating alone would arm every session on first
-    // registration) and the interval rewrite is conf-gated (bucketWidth
-    // unset ⇒ no-op).
-    ext.injectOptimizerRule(_ => RouteAggregateToMv)
-    ext.injectOptimizerRule(_ => RouteFilterToProjection)
-    ext.injectOptimizerRule(_ => RouteTokenFilterToIndex)
-    ext.injectOptimizerRule(_ => IntervalJoinRewrite)
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+    // the same rule/strategy set that operators install at runtime —
+    // extension-configured sessions get them statically
+    GraftRules.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftRules.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+  }
+}
+
+/** The engine's transparent Catalyst rules and planner strategy, in ONE
+  * list that [[GraftExtensions]] and the runtime [[install]] both read.
+  * Each stays inert until its own gate opens: the three routing rules are
+  * SESSION-gated (their EnabledKey conf — registry-gating alone would arm
+  * every session on first registration), the interval rewrite is
+  * conf-gated (`spark.graft.intervalJoin.bucketWidth` unset ⇒ no-op), and
+  * the strategy plans only [[TopKPerGroup]] nodes. So installing the
+  * whole list wherever one of them is needed changes no other plan.
+  */
+object GraftRules {
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(RouteAggregateToMv,
+    RouteFilterToProjection, RouteTokenFilterToIndex, IntervalJoinRewrite)
+  val strategies: Seq[SparkStrategy] = Seq(TopKPerGroupStrategy)
+
+  /** Idempotent runtime install (extensions-based injection is
+    * static-conf-only and absent in driver sessions). Idempotence is a
+    * membership check, NOT a static session set: a strong-reference
+    * registry would pin every session (joinIntervalAuto mints one per
+    * invocation) for the JVM's lifetime.
+    */
+  def install(s: SparkSession): Unit = {
+    val e = s.experimental
+    e.extraOptimizations ++= optimizerRules.filterNot(e.extraOptimizations.contains)
+    e.extraStrategies ++= strategies.filterNot(e.extraStrategies.contains)
   }
 }
 

@@ -177,13 +177,5 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  // idempotence by membership check, NOT a static session set: a strong
-  // reference registry would pin every session (joinIntervalAuto mints
-  // one per invocation) for the JVM's lifetime — the MvRouting.enable
-  // pattern
-  def install(s: SparkSession): Unit = {
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(IntervalJoinRewrite))
-      s.experimental.extraOptimizations = cur :+ IntervalJoinRewrite
-  }
+  def install(s: SparkSession): Unit = GraftRules.install(s)
 }

@@ -310,10 +310,6 @@ object MvRouting {
     registry.remove(basePath)
   }
 
-  /** Install the routing rule into a session at runtime (extraOptimizations
-    * runs after the main optimizer batches; extensions-based injection is
-    * static-conf-only and absent in driver sessions).
-    */
   /** Per-session activation flag. The MV REGISTRY is JVM-global (like a
     * metastore) and the extensions-injected rule rides every session of
     * an extensions-configured JVM — without a session-scoped gate, one
@@ -324,11 +320,12 @@ object MvRouting {
     */
   private[graft] val EnabledKey = "spark.graft.mv.routing.enabled"
 
+  /** Opt the session in; the rule itself comes with [[GraftRules.install]]
+    * (extraOptimizations run after the main optimizer batches).
+    */
   def enable(s: SparkSession): Unit = {
     s.conf.set(EnabledKey, "true")
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(RouteAggregateToMv))
-      s.experimental.extraOptimizations = cur :+ RouteAggregateToMv
+    GraftRules.install(s)
   }
 
   /** Opt the session back out (the EnabledKey gate makes the installed

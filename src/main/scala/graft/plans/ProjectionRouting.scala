@@ -82,9 +82,7 @@ object ProjectionRouting {
 
   def enable(s: SparkSession): Unit = {
     s.conf.set(EnabledKey, "true")
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(RouteFilterToProjection))
-      s.experimental.extraOptimizations = cur :+ RouteFilterToProjection
+    GraftRules.install(s)
   }
 
   /** Opt the session back out; shared-session tests must call this in a

@@ -73,9 +73,7 @@ object TextIndexRouting {
 
   def enable(s: SparkSession): Unit = {
     s.conf.set(EnabledKey, "true")
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(RouteTokenFilterToIndex))
-      s.experimental.extraOptimizations = cur :+ RouteTokenFilterToIndex
+    GraftRules.install(s)
   }
 
   /** Opt the session back out; shared-session tests must call this in a

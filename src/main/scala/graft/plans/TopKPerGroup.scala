@@ -60,13 +60,7 @@ object TopKPerGroupStrategy extends SparkStrategy {
     case _ => Nil
   }
 
-  // membership check, not a static session set (which would strongly
-  // pin every installed session for the JVM's lifetime)
-  def install(s: SparkSession): Unit = {
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(TopKPerGroupStrategy))
-      s.experimental.extraStrategies = cur :+ TopKPerGroupStrategy
-  }
+  def install(s: SparkSession): Unit = GraftRules.install(s)
 }
 
 case class TopKPerGroupExec(k: Int, groupExprs: Seq[Expression],

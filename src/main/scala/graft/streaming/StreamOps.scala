@@ -319,8 +319,9 @@ object StreamOps {
     * O(table). Replay-safe by construction: the merge for batch b reads
     * only versions `< b` off disk (never an in-memory "latest" pointer),
     * so an at-least-once re-execution of batch b reads the same inputs,
-    * makes the same part-or-base choices and idempotently overwrites
-    * `v=b`. Tombstones are kept in state (an out-of-order pre-delete
+    * makes the same part-or-base choices and republishes `v=b`. Every
+    * version is staged in `.txn_v=b` and made visible by one rename
+    * ([[commitVersion]]), so no reader sees a half-written one. Tombstones are kept in state (an out-of-order pre-delete
     * event can never resurrect a key); the final read filters them.
     * Version dirs that a newer base fully supersedes are GC'd after each
     * merge (see [[gcCdcVersions]]).
@@ -470,10 +471,11 @@ object StreamOps {
       state: String): Set[Int] =
     mergeCdcTypedTxn(typed, batchId, state, None)
 
-  /** The merge, optionally with EXACTLY-ONCE offset semantics: when
-    * `offsets` is given, the consumer's position is written INSIDE the
-    * staged version dir and the whole version — state AND position —
-    * becomes visible through one atomic rename. There is then no crash
+  /** The merge, optionally with EXACTLY-ONCE offset semantics: every
+    * version is staged and becomes visible through one atomic rename,
+    * and when `offsets` is given the consumer's position is written
+    * INSIDE the staged version dir, so state AND position publish
+    * together. There is then no crash
     * window between "state merged" and "position committed" at all:
     * recovery reads the position out of the latest visible version
     * ([[txnCommittedOffsets]]), a crash mid-staging leaves an invisible
@@ -521,7 +523,7 @@ object StreamOps {
       // (degrading to at-least-once). Publish a bucketless version
       // carrying only _offsets through the same atomic rename.
       offsets.foreach { ofs =>
-        commitTxnVersion(state, batchId, ofs)(_.mkdirs())
+        commitVersion(state, batchId, Some(ofs))(_.mkdirs())
         gcCdcVersions(state, batchId)
       }
       return touched
@@ -561,33 +563,29 @@ object StreamOps {
           .filter(_.isDirectory).foreach(d => graft.Scratch.writeDurable(
             new java.io.File(d, cdcBaseMarker).toPath, ""))
       }
-      offsets match {
-        case None => write(new java.io.File(s"$state/v=$batchId"))
-        case Some(ofs) => commitTxnVersion(state, batchId, ofs)(write)
-      }
+      commitVersion(state, batchId, offsets)(write)
       gcCdcVersions(state, batchId)
       publish.foreach(_(merged))
     } finally { if (publish.nonEmpty) merged.unpersist(false) }
     touched
   }
 
-  /** The exactly-once commit of `v=<batchId>`: `stage` fills the
-    * invisible `.txn_v=` dir (crash leftovers are swept by the replay),
-    * the position is written into it durably, and ONE atomic rename
-    * publishes it, replacing a replayed target; then the dir is fsync'd.
+  /** The one commit of `v=<batchId>`: `stage` fills the invisible
+    * `.txn_v=` dir (crash leftovers are swept by the replay), the
+    * position, when given, is written into it durably, and
+    * [[graft.Scratch.publishDir]] makes the whole version visible with
+    * one atomic rename, replacing a replayed target.
     */
-  private def commitTxnVersion(state: String, batchId: Long,
-      ofs: Map[Int, Long])(stage: java.io.File => Unit): Unit = {
-    val target = java.nio.file.Paths.get(s"$state/v=$batchId")
+  private def commitVersion(state: String, batchId: Long,
+      offsets: Option[Map[Int, Long]])(stage: java.io.File => Unit): Unit = {
     val staging = new java.io.File(s"$state/.txn_v=$batchId")
     graft.Scratch.deleteRecursively(staging)
     stage(staging)
-    graft.Scratch.writeDurable(staging.toPath.resolve("_offsets"),
-      ofs.toSeq.sorted.map { case (p, o) => s"$p $o" }.mkString("\n"))
-    graft.Scratch.deleteRecursively(target.toFile)
-    java.nio.file.Files.move(staging.toPath, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    graft.Scratch.fsyncDir(java.nio.file.Paths.get(state))
+    offsets.foreach(ofs => graft.Scratch.writeDurable(
+      staging.toPath.resolve("_offsets"),
+      ofs.toSeq.sorted.map { case (p, o) => s"$p $o" }.mkString("\n")))
+    graft.Scratch.publishDir(staging.toPath,
+      java.nio.file.Paths.get(s"$state/v=$batchId"))
   }
 
   /** Recover the consumer position from the latest visible state

@@ -458,7 +458,8 @@ class StateMaintenanceSpec extends GraftSpec {
         w.head._2
       }
       // the merge: prev ∪ batch shuffled ONCE, the window inside it
-      val merge = writeTo("/merge_state/v=1")
+      // (written to the version's staging dir, then renamed to v=1)
+      val merge = writeTo("/merge_state/.txn_v=1")
       assert(shuffles(merge, intoCache = true) == 1,
         s"the merge must shuffle the state once:\n$merge")
       // the live base is published from the cached merge result: no
@@ -509,7 +510,7 @@ class StateMaintenanceSpec extends GraftSpec {
         bucketDirs(s"$partsDir/v=$i").size).sum
       assert(bucketDirsBelow(6L) == 48, "every bucket has a base and 5 parts")
       measured(StreamOps.mvMaintainBatch(upd(6L), 6L, partsDir, partsBase, partsMv))
-      assert(shuffles(writeTo("/parts_state/v=6"), intoCache = true) == 1)
+      assert(shuffles(writeTo("/parts_state/.txn_v=6"), intoCache = true) == 1)
       checkJobs()
       // the batch wrote 8 one-row parts, no base
       assert(bucketDirs(s"$partsDir/v=6").size == 8 &&
@@ -836,6 +837,89 @@ class StateMaintenanceSpec extends GraftSpec {
     val live = cdcState(a).filter(_._2._4 != "DELETE").map { case (k, v) => k -> v._1 }
     assert(live.size == 80 && live(22L) == 322.0 && live(80L) == 380.0 &&
       live(3L) == 203.0 && !live.contains(5L))
+    // the non-txn entry point commits the same way: a torn staging it
+    // left stays invisible, and its replay sweeps it
+    val (c, d) = (s"$root/c", s"$root/d")
+    def plain(state: String, i: Int): Unit =
+      StreamOps.mergeCdcTyped(typed(batches(i)), i.toLong, state)
+    (0 to 2).foreach(plain(d, _))
+    (0 to 1).foreach(plain(c, _))
+    val plainCommitted = cdcState(c)
+    val torn = new java.io.File(s"$c/.txn_v=2")
+    graft.Scratch.cloneTree(s"$d/v=2", torn.getPath)
+    assert(graft.Scratch.listPartitionDirs(torn.getPath, "bucket=").nonEmpty)
+    assert(cdcState(c) == plainCommitted, "the staging must stay invisible")
+    plain(c, 2)
+    assert(!torn.exists(), "the replay must sweep the torn staging")
+    assert(!new java.io.File(s"$c/v=2/_offsets").exists(),
+      "a version without offsets carries no position")
+    assert(cdcState(c) == cdcState(d), "the replay must converge to the uninterrupted state")
+    assert(cdcState(c) == cdcState(a))
+  }
+
+  private def stagedDir(root: java.nio.file.Path, name: String,
+      body: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createDirectories(root.resolve(name))
+    java.nio.file.Files.writeString(d.resolve("part"), body)
+    d
+  }
+
+  private def listing(d: java.nio.file.Path): Map[String, Seq[Byte]] =
+    new java.io.File(d.toString).listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("Scratch.claimDir: a free slot wins; a taken slot loses and sweeps; other errors propagate") {
+    val root = java.nio.file.Paths.get(graft.Scratch.dir("graft_claim_test"))
+    val slot = root.resolve("v=1")
+    val a = stagedDir(root, ".txn_a", "winner")
+    assert(graft.Scratch.claimDir(a, slot))
+    assert(!java.nio.file.Files.exists(a) && listing(slot) == Map(
+      "part" -> "winner".getBytes("UTF-8").toSeq))
+    val won = listing(slot)
+    val b = stagedDir(root, ".txn_b", "loser")
+    assert(!graft.Scratch.claimDir(b, slot), "a taken slot must lose the claim")
+    assert(!java.nio.file.Files.exists(b), "a lost claim must sweep its staging")
+    assert(listing(slot) == won, "the winner's files must stay byte-identical")
+    // an empty dir in the slot is taken too
+    val empty = java.nio.file.Files.createDirectories(root.resolve("v=2"))
+    assert(!graft.Scratch.claimDir(stagedDir(root, ".txn_e", "x"), empty))
+    assert(listing(empty).isEmpty)
+    // a missing parent is an I/O failure, not a lost race: it propagates
+    // and the staged data stays where it was
+    val c = stagedDir(root, ".txn_c", "orphan")
+    intercept[java.nio.file.NoSuchFileException] {
+      graft.Scratch.claimDir(c, root.resolve("absent/v=1"))
+    }
+    assert(listing(c) == Map("part" -> "orphan".getBytes("UTF-8").toSeq),
+      "a failed claim must sweep nothing")
+  }
+
+  test("Scratch.publishDir replaces an existing target and leaves no staging dir") {
+    val root = java.nio.file.Paths.get(graft.Scratch.dir("graft_publish_test"))
+    val target = root.resolve("v=1")
+    graft.Scratch.publishDir(stagedDir(root, ".txn_a", "first"), target)
+    assert(listing(target) == Map("part" -> "first".getBytes("UTF-8").toSeq))
+    val old = stagedDir(root, "v=1/nested", "old")
+    assert(java.nio.file.Files.exists(old))
+    val b = stagedDir(root, ".txn_b", "second")
+    graft.Scratch.publishDir(b, target)
+    assert(listing(target) == Map("part" -> "second".getBytes("UTF-8").toSeq),
+      "the publish must replace the whole target")
+    assert(new java.io.File(root.toString).list().toSet == Set("v=1"),
+      "no staging dir may outlive its publish")
+  }
+
+  test("no main source outside Scratch (Core.scala) calls Files.move") {
+    import scala.jdk.CollectionConverters._
+    val srcs = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    def moves(p: java.nio.file.Path) =
+      java.nio.file.Files.readString(p).contains("Files.move")
+    val (core, rest) = srcs.partition(_.getFileName.toString == "Core.scala")
+    assert(core.size == 1 && moves(core.head) && rest.size > 30,
+      s"the guard must see Scratch's own move and the other sources: ${srcs.size}")
+    val raw = rest.filter(moves).map(_.toString).sorted
+    assert(raw.isEmpty, s"commit through Scratch.publishDir/claimDir/atomicPublish: $raw")
   }
 
   test("summing-state MV folds deltas across batches; replay + GC safe") {
