@@ -115,8 +115,49 @@ final class DfCache(maxEntries: Int = 16) {
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md). */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The session confs that change what parquet schema inference returns
+    * for the same file: a fixture read under another value of any of them
+    * must infer again.
+    */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** absolute path → (file signature + inference confs, inferred schema).
+    * One entry per path, replaced when its key changes, so the map stays
+    * as small as the set of fixture paths read, and a drop re-encoded at
+    * the same path (round 7: events.ts NANOS → MICROS) is inferred again.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** A fixture read with a known schema. Parquet schema inference is a
+    * Spark job (a footer read, ≈70 ms); it runs on the first read of a
+    * path and again only when the path's files or the inference confs
+    * change. A missing path falls through to the plain read, which fails
+    * as it always has.
+    */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val abs = new java.io.File(path).getAbsolutePath
+    val sig = Scratch.pathSignature(abs)
+    if (sig == "0") spark.read.parquet(path)
+    else {
+      val key = (sig +: inferenceConfs.map(spark.conf.getOption(_).getOrElse("")))
+        .mkString("|")
+      val known = schemas.get(abs) match {
+        case (k, schema) if k == key => schema
+        case _ =>
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(abs, (key, inferred))
+          inferred
+      }
+      spark.read.schema(known).parquet(path)
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
@@ -288,17 +329,35 @@ object Scratch {
       // against the live root. Zero parquet files is the same mid-swap
       // signal: no fixture dir is legitimately empty.
       if (listed == null || listed.isEmpty) "0"
-      else {
-        val files = listed.sortBy(_.getName)
-        val sig = files
-          .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-          .mkString("|")
-        // stable 64-bit FNV-1a over the concatenated signature
-        var h = 0xcbf29ce484222325L
-        sig.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
-        java.lang.Long.toHexString(h)
-      }
+      else fnv(listed.toSeq)
     } catch { case _: Throwable => "0" }
+
+  /** The [[fixtureFingerprint]] recipe applied to one path: the file
+    * itself, or every file under a directory (a parquet dataset). "0"
+    * when nothing is there.
+    */
+  def pathSignature(path: String): String =
+    try {
+      val root = new java.io.File(path)
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory)
+          Option(f.listFiles()).toSeq.flatten.flatMap(files)
+        else Seq(f)
+      val listed = if (root.exists()) files(root) else Nil
+      if (listed.isEmpty) "0" else fnv(listed)
+    } catch { case _: Throwable => "0" }
+
+  /** Stable 64-bit FNV-1a over the files' (name, size, mtime), in name
+    * order.
+    */
+  private def fnv(files: Seq[java.io.File]): String = {
+    val sig = files.sortBy(_.getPath)
+      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+      .mkString("|")
+    var h = 0xcbf29ce484222325L
+    sig.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
+    java.lang.Long.toHexString(h)
+  }
 
   /** Close-safe read of a small text manifest — the read twin of
     * [[atomicPublish]]. `scala.io.Source` holds an open fd until GC if

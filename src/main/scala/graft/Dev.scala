@@ -56,7 +56,7 @@ object Dev {
     val each: (String, () => DataFrame) => Unit = mode match {
       case "profile" =>
         // one throwaway action to absorb session/codegen start-up
-        spark.read.parquet(s"$sfDir/region.parquet").count()
+        Tables.region(spark, sfDir).count()
         (k, df) => {
           // Bench's -1 failure sentinel, not elapsed-to-failure: a key
           // that throws in 0.3s must not print a plausible timing

@@ -200,27 +200,29 @@ object DedupGraph {
     * at 100 TB you checkpoint between iterations (dedup_cluster's loop
     * pattern), you don't fuse them.
     *
-    * Scale notes: distinct edges = one shuffle on (cust, supp); outdeg =
-    * partial count on cust broadcast back onto edges (dim-sized); the
-    * contribution sum is one partial-agg shuffle on supp. Linear in
-    * |edges|, the textbook distributed PR step.
+    * Scale notes: the edge list is built once, from the lineitem ⋈
+    * orders join (broadcast while orders fits the threshold), and
+    * shuffled once, on src. Inside that partitioning the distinct and
+    * the per-src outdegree (a window over src) need no further exchange;
+    * the contribution sum is one partial-agg shuffle on dst. Linear in
+    * |edges|, the textbook distributed PR step. A null src has no
+    * outdegree: its edges are dropped, as the oracle's `JOIN deg USING
+    * (src)` drops them.
     */
-  private def graphPagerankStep(s: SparkSession, dir: String): DataFrame = {
-    val edges = Tables.lineitem(s, dir)
+  private def graphPagerankStep(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
+      .filter(col("src").isNotNull)
+      .repartition(col("src"))
       .distinct()
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // no broadcast hint: AQE broadcasts while outdeg is dimension-sized
-    // and falls back to a src-co-partitioned shuffle join when the node
-    // set outgrows the threshold — the right call at both scales
-    edges.join(outdeg, "src")
+      .withColumn("outdeg",
+        count(lit(1)).over(Window.partitionBy(col("src"))))
       .groupBy(col("dst").as("s_suppkey"))
       .agg((lit(150000L) + sum(expr("850000 div outdeg"))).as("pr_micro"),
         count(lit(1)).as("n_in"))
       .orderBy(col("s_suppkey"))
-  }
 
   /** Distributed triangle counting over the part co-purchase graph
     * (parts appearing in the same order are connected): the ORDERED-

@@ -318,11 +318,13 @@ object RouteTokenFilterToIndex extends Rule[LogicalPlan] {
               Filter(cond, newChild)
             }
             else {
-              // pruned scan of the admitted files only; original
-              // exprIds restored by aliasing (ProjectionRouting
-              // pattern), and the FULL original filter stays above —
-              // bloom false positives cost I/O, never correctness
-              val pruned = SparkSession.active.read
+              // pruned scan of the admitted files only, read with the
+              // relation's own data schema (inferring it again would run
+              // a footer-read job while optimizing); original exprIds
+              // restored by aliasing (ProjectionRouting pattern), and the
+              // FULL original filter stays above — bloom false positives
+              // cost I/O, never correctness
+              val pruned = SparkSession.active.read.schema(fs.dataSchema)
                 .parquet(admitted: _*).queryExecution.analyzed
               val prunedAttr = pruned.output
                 .map(a => a.name -> a.asInstanceOf[AttributeReference])

@@ -59,30 +59,25 @@ object StreamOps {
   /** true iff this fixture drop's ts is TIMESTAMP(NANOS) (surfaces as
     * LONG under the legacy conf; on Spark builds without that conf the
     * nanos file would be unreadable anyway, so LONG is the reliable
-    * marker). Footer-only check, cached per sfDir.
+    * marker). The schema comes from `Tables.t`'s cache, which infers
+    * again when a drop re-encodes events.ts at the same path (observed
+    * round 7, NANOS→MICROS).
     */
-  private val tsNanosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def eventsTsIsNanos(s: SparkSession, dir: String): Boolean =
-    // fingerprint in the key: a testdata drop that re-encodes events.ts
-    // at the same path (observed round 7, NANOS→MICROS) must re-probe,
-    // or a live JVM reads the new encoding with the stale schema choice
-    tsNanosCache.computeIfAbsent(
-      s"$dir@${graft.Scratch.fixtureFingerprint(dir)}", _ => {
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      val isNanos = s.read.parquet(s"$dir/events.parquet")
-        .schema("ts").dataType == LongType
-      // restore on a micros fixture: the probe must not leak a global
-      // decode-behavior change into the caller's session (readers of a
-      // nanos fixture re-set the conf themselves)
-      if (!isNanos) prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      isNanos
-    })
+  private def eventsTsIsNanos(s: SparkSession, dir: String): Boolean = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "true")
+    val isNanos =
+      graft.Tables.t(s, dir, "events").schema("ts").dataType == LongType
+    // restore on a micros fixture: the probe must not leak a global
+    // decode-behavior change into the caller's session (readers of a
+    // nanos fixture re-set the conf themselves)
+    if (!isNanos) prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None => s.conf.unset(key)
+    }
+    isNanos
+  }
 
   /** Streaming source over `srcDir` normalized to
     * (event_id, ts_us, user_id, event_type, value, props); `dir` is the
@@ -2219,8 +2214,7 @@ object StreamOps {
       val (rows, schema) =
         if (eventsTsIsNanos(s, dir)) {
           s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          val mxNs = s.read.schema(eventsNanosSchema)
-            .parquet(s"$dir/events.parquet")
+          val mxNs = graft.Tables.t(s, dir, "events")
             .agg(max(col("ts"))).head().getLong(0)
           val sentNs = mxNs + 30L * 86400 * 1000 * 1000 * 1000
           (java.util.Arrays.asList(
@@ -2228,7 +2222,7 @@ object StreamOps {
             org.apache.spark.sql.Row(-2L, sentNs, -1L, "click", 0.0, "{}")),
             eventsNanosSchema)
         } else {
-          val mx = s.read.parquet(s"$dir/events.parquet")
+          val mx = graft.Tables.t(s, dir, "events")
             .agg(max(col("ts"))).head()
             .getAs[java.time.LocalDateTime](0)
           val sent = mx.plusDays(30)

@@ -2836,8 +2836,18 @@ class PlanShapeSpec extends GraftSpec {
     assert(p.contains("Subquery") || p.contains("subquery"), p.take(600))
   }
 
-  test("graph_pagerank_step broadcasts outdegrees onto the edge list") {
-    assert(plan("graph_pagerank_step").contains("BroadcastHashJoin"))
+  test("graph_pagerank_step: one edge scan, one shuffle on src, outdegree by window") {
+    val p = plan("graph_pagerank_step")
+    val lines = p.linesIterator.toSeq
+    val liScans = lines.filter(l => l.contains("FileScan parquet") &&
+      l.contains("lineitem.parquet"))
+    assert(liScans.length == 1, s"the edge list is built once:\n$p")
+    assert(!p.contains("SortMergeJoin"), p)
+    assert(lines.exists(_.contains("BroadcastHashJoin")), p)
+    assert(lines.count(_.contains("Exchange hashpartitioning(src#")) == 1,
+      s"the edges shuffle once, on src:\n$p")
+    assert(lines.exists(l => l.contains("Window [count(1)") &&
+      l.contains("windowspecdefinition(src#")), s"outdeg is a window on src:\n$p")
   }
 
   test("join_anti_null_aware plans the null-aware single-column fast path") {
